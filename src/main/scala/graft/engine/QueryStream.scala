@@ -83,12 +83,13 @@ object QueryStream {
     * readQueryStream's loop (open -> ack, close -> stop, frame -> entries,
     * frame-level failure -> 0x03 message).
     *
-    * The executor may emit MULTIPLE responses per query (chunked large
-    * results, GraftSession.executeStreamed): entries accumulate in an
-    * output buffer that is flushed as a complete 0x04 frame whenever it
-    * crosses `flushBytes` — so driver memory stays bounded by one chunk,
-    * not the result set. Small results keep the one-frame-per-request
-    * shape. */
+    * The executor may emit MULTIPLE responses per query:
+    * GraftSession.executeStreamed runs the same statement path as
+    * execute and differs only in delivering a read's rows as batches.
+    * Entries accumulate in an output buffer that is flushed as a complete
+    * 0x04 frame whenever it crosses `flushBytes` — so driver memory stays
+    * bounded by one chunk, not the result set. Small results keep the
+    * one-frame-per-request shape. */
   def serveStreamed(in: InputStream, out: OutputStream,
       executor: (QueryInput, QueryResponse => Unit) => Unit,
       flushBytes: Int = 1 << 20): Unit = {

@@ -422,9 +422,12 @@ object AudioFeatures {
       // direct evaluation in the inner loop (identical expressions)
       val tMin = math.ceil(center - halfWidth).toInt - jInt - 2
       val tMax = math.floor(center + halfWidth).toInt - jInt + 2
-      tMinA(r) = tMin
-      countA(r) = tMax - tMin + 1
-      baseA(r) = off
+      // output j looks its entry up by phase j·p mod q: r's entry belongs
+      // at phase r·p mod q (a bijection, p being odd once q = 2^m > 1)
+      val phase = ((r.toLong * p) & (q - 1)).toInt
+      tMinA(phase) = tMin
+      countA(phase) = tMax - tMin + 1
+      baseA(phase) = off
       var t = tMin
       while (t <= tMax) {
         val d = (jInt + t) - center // exact; == t - frac(center) at any j

@@ -62,7 +62,8 @@ class ResampleSpec extends AnyFunSuite {
       if (i % 3 == 0) Short.MaxValue else if (i % 3 == 1) Short.MinValue
       else 0)
     val pairs = Seq((8000, 16000), (16000, 8000), (48000, 16000),
-      (48000, 32000), (22050, 44100), (44100, 16000), (8000, 11025))
+      (48000, 32000), (22050, 44100), (44100, 16000), (8000, 11025),
+      (12000, 16000), (24000, 32000), (48000, 64000))
     for ((src, dst) <- pairs; s <- Seq(noisy, clipping,
         tone(8192, 440.0, src), Array.empty[Short], Array[Short](7))) {
       val a = AudioFeatures.resample(s, src, dst)
